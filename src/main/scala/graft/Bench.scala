@@ -193,10 +193,14 @@ object Bench {
 
     // warmup: run the identical pipeline shape at 5% size so whole-stage
     // codegen compilation and JIT happen outside the timed window (the
-    // baseline's "excluding one-time startup" provision — generated-class
-    // caches hit on the real run because the plan shapes are identical;
-    // a too-small warmup leaves AQE on different plan shapes and the first
-    // timed run pays multi-second codegen)
+    // baseline's "excluding one-time startup" provision). The real run
+    // reuses the warmup's generated classes only while they are still in
+    // Spark's codegen cache (100 classes, LRU, shared by the whole JVM):
+    // one file's pipeline generates 55 distinct classes in correct mode
+    // and 59 in faithful mode (measured on a 30k-row CSV input), so the
+    // two warmed modes together can overflow it. A too-small warmup leaves
+    // AQE on different plan shapes and the first timed run pays
+    // multi-second codegen.
     val warm = genOhlcv(spark, math.max(2000L, gridRows / 20)).cache()
     warm.count()
     for (mode <- Seq("faithful", "correct"))

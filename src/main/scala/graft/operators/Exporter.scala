@@ -7,8 +7,9 @@ import scala.collection.immutable.ListMap
 
 import graft.core.Json
 import graft.sources.Readers
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Parquet sink with validation, sidecar metadata and NDJSON audit log
   * (reference O18–O21: src/etl/load/exporter.py).
@@ -23,7 +24,8 @@ import org.apache.spark.sql.functions._
   *    3 non-null OPEN/CLOSE values (exporter.py:76-91).
   *
   * Everything the driver touches is a fixed-size aggregate; validation is
-  * one agg pass (least/greatest row-wise predicates folded into sums).
+  * one agg pass (least/greatest row-wise predicates folded into maxes),
+  * observed inside the write job when it can be.
   */
 object Exporter {
 
@@ -39,17 +41,28 @@ object Exporter {
 
   def validateFinalDf(df: DataFrame,
                       knownDistinctTs: Boolean = false): ListMap[String, Any] = {
+    val aggs = validationAggs(df, knownDistinctTs)
+    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    validationReport(n => r.getAs[Any](n), hasOhlc(df), knownDistinctTs)
+  }
+
+  private def hasOhlc(df: DataFrame): Boolean =
+    Seq("OPEN", "HIGH", "LOW", "CLOSE").forall(df.columns.contains)
+
+  /** The validation aggregates — one pass, least/greatest row-wise
+    * predicates folded into maxes.
+    */
+  private def validationAggs(df: DataFrame,
+                             knownDistinctTs: Boolean): Seq[Column] = {
     require(df.columns.contains(TsCol),
       s"$TsCol column required before export")
-    val hasOhlc = Seq("OPEN", "HIGH", "LOW", "CLOSE").forall(df.columns.contains)
-
     var aggs = Vector(
       count(lit(1)).as("_rows"),
       min(col(TsCol)).as("_start"),
       max(col(TsCol)).as("_end"),
       sum(when(col(TsCol).isNull, 1).otherwise(0)).as("_tsnull"))
     if (!knownDistinctTs) aggs :+= countDistinct(col(TsCol)).as("_dts")
-    if (hasOhlc) {
+    if (hasOhlc(df)) {
       val anyNeg = Seq("OPEN", "HIGH", "LOW", "CLOSE")
         .map(c => col(c) < 0).reduce(_ || _)
       aggs :+= max(when(anyNeg, 1).otherwise(0)).as("_neg")
@@ -60,28 +73,32 @@ object Exporter {
         col("HIGH") < greatest(col("OPEN"), col("LOW"), col("CLOSE")), 1)
         .otherwise(0)).as("_invhigh")
     }
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    aggs
+  }
 
-    val rows = r.getAs[Long]("_rows")
+  /** The validation report from the aggregates' values by name. */
+  private def validationReport(v: String => Any, hasOhlc: Boolean,
+                               knownDistinctTs: Boolean): ListMap[String, Any] = {
+    val rows = v("_rows").asInstanceOf[Long]
     val dups =
       if (knownDistinctTs) 0L
-      else rows - r.getAs[Long]("_dts") -
-        (if (r.getAs[Long]("_tsnull") > 0) 1 else 0)
+      else rows - v("_dts").asInstanceOf[Long] -
+        (if (v("_tsnull").asInstanceOf[Long] > 0) 1 else 0)
     var report = Json.obj(
       "index_dtype" -> "datetime64[us, UTC]",
       "index_tz" -> "UTC",
       "duplicated_timestamps" -> dups)
     if (hasOhlc)
       report ++= Json.obj(
-        "negative_prices" -> (r.getAs[Int]("_neg") == 1),
-        "invalid_low" -> (r.getAs[Int]("_invlow") == 1),
-        "invalid_high" -> (r.getAs[Int]("_invhigh") == 1))
+        "negative_prices" -> (v("_neg") == 1),
+        "invalid_low" -> (v("_invlow") == 1),
+        "invalid_high" -> (v("_invhigh") == 1))
     report ++= Json.obj(
       "rows" -> rows,
       "start" -> (if (rows > 0)
-        Reporting.fmtTs(r.getAs[java.sql.Timestamp]("_start")) else null),
+        Reporting.fmtTs(v("_start").asInstanceOf[java.sql.Timestamp]) else null),
       "end" -> (if (rows > 0)
-        Reporting.fmtTs(r.getAs[java.sql.Timestamp]("_end")) else null))
+        Reporting.fmtTs(v("_end").asInstanceOf[java.sql.Timestamp]) else null))
     report
   }
 
@@ -133,25 +150,60 @@ object Exporter {
     if (n > 0) { md.update(t0.getBytes); md.update(t1.getBytes) }
     val present = keys.filter(df.columns.contains)
     if (present.nonEmpty) {
-      val head = df.orderBy(col(TsCol))
-        .select(present.map(col): _*).limit(1000).collect()
-      for ((k, i) <- present.zipWithIndex) {
-        val sample = head.iterator.filterNot(_.isNullAt(i))
-          .map(_.get(i)).take(3).toSeq
+      val head: Seq[Seq[Any]] =
+        if (present.forall(c => df.schema(c).dataType == DoubleType))
+          headByTime(df, present, 1000)
+        else df.orderBy(col(TsCol)).select(present.map(col): _*).limit(1000)
+          .collect().toSeq.map(r => (0 until r.length).map(r.get))
+      for (i <- present.indices) {
+        val sample = head.iterator.map(_(i)).filter(_ != null).take(3).toSeq
         md.update(sample.mkString("[", ", ", "]").getBytes)
       }
     }
     md.digest().map("%02x".format(_)).mkString
   }
 
+  /** The double columns `cols` of the first `n` rows in time order (nulls
+    * first, as `orderBy` sorts them; ties in partition order), from a
+    * narrow scan of the frame's own rows: each partition keeps its `n`
+    * earliest rows, the driver merges. The rows `orderBy(ts).limit(n)`
+    * returns, without generating a top-k plan.
+    */
+  private def headByTime(df: DataFrame, cols: Seq[String], n: Int): Seq[Seq[Any]] = {
+    val schema = df.schema
+    val tsIdx = schema.fieldIndex(TsCol)
+    val idx = cols.map(schema.fieldIndex).toArray
+    // (ts present, ts, partition, row) ranks rows; values ride along
+    val byTime: Ordering[(Boolean, Long, Int, Long, Seq[Any])] =
+      Ordering.by(t => (t._1, t._2, t._3, t._4))
+    graft.core.Scan.partitions(df) { (pid, it) =>
+      val heap = scala.collection.mutable.PriorityQueue
+        .empty[(Boolean, Long, Int, Long, Seq[Any])](byTime)
+      var row = 0L
+      while (it.hasNext) {
+        val r = it.next()
+        val tsP = !r.isNullAt(tsIdx)
+        val rank = (tsP, if (tsP) r.getLong(tsIdx) else 0L, pid, row, null)
+        if (heap.size < n || byTime.lt(rank, heap.head)) {
+          if (heap.size == n) heap.dequeue()
+          heap.enqueue(rank.copy(_5 =
+            idx.toSeq.map(i => if (r.isNullAt(i)) null else r.getDouble(i))))
+        }
+        row += 1
+      }
+      heap.iterator
+    }.sorted(byTime).take(n).map(_._5).toSeq
+  }
+
   /** O20: validate → zstd parquet (+partitioning) → sidecar JSON → hash.
     *
-    * The validation aggregate and the parquet write are independent reads
-    * of the (cached) input, so they run CONCURRENTLY — Spark's cache locks
-    * per partition, so racing the first action never duplicates compute.
+    * With `knownDistinctTs` the validation aggregates ride the write job
+    * itself (`Dataset.observe`): one scan of the input instead of a
+    * separate validation job. Observed metrics cannot hold a distinct
+    * count, so otherwise validation runs as its own aggregate first.
     * Validation is warn-only in the reference (exporter.py:56-62), so
-    * write-before-validate-completes cannot change any outcome; the sidecar
-    * still waits for both.
+    * validating inside the write cannot change any outcome; the sidecar
+    * waits for both.
     *
     * `rowGroupSize` maps to parquet.block.size in BYTES (the reference's
     * pyarrow knob counts rows — config_model.py:21 — sizes don't translate,
@@ -165,24 +217,33 @@ object Exporter {
                                writeMode: String = "overwrite",
                                rowGroupSize: Option[Long] = None)
       : ListMap[String, Any] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val valReportF = Future(
-      timed("ex_validate")(validateFinalDf(df, knownDistinctTs)))(
-      Runner.tfExecutionContext)
     val (prepared0, parts) = preparePartitionCols(df, partitionCols)
     val prepared = prepared0.drop(Readers.FileOrderCol)
+    val separate =
+      if (knownDistinctTs) None
+      else Some(timed("ex_validate")(validateFinalDf(df, knownDistinctTs)))
+    lazy val observation = new Observation()
+    val observed =
+      if (separate.isDefined) prepared
+      else {
+        val aggs = validationAggs(df, knownDistinctTs = true)
+        prepared.observe(observation, aggs.head, aggs.tail: _*)
+      }
 
     // A single-partition frame (the shape every single-series pipeline
     // export has) would write its whole parquet output on ONE task — a
-    // scale-killer at 100 TB and a straggler even at bench scale. Range-
-    // repartition on time so the write parallelizes while part-file order
-    // still follows global time order (part-00000 < part-00001 ranges).
+    // scale-killer at 100 TB. Range-repartition on time so the write
+    // parallelizes while part-file order still follows global time order
+    // (part-00000 < part-00001 ranges). A frame that fits one file (no
+    // more than Spark's own read-split size) is written as is: splitting
+    // it costs a sampling job and a shuffle to write eight small files.
+    val fitsOneFile = graft.core.Sizing.planEstimate(prepared).exists(
+      _ <= df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
     val toWrite =
-      if (parts.isEmpty && prepared.columns.contains(TsCol) &&
+      if (parts.isEmpty && prepared.columns.contains(TsCol) && !fitsOneFile &&
           prepared.rdd.getNumPartitions == 1)
-        prepared.repartitionByRange(8, col(TsCol))
-      else prepared
+        observed.repartitionByRange(8, col(TsCol))
+      else observed
     val writer0 = toWrite.write.mode(writeMode)
       .option("compression", compression)
     val writer = rowGroupSize.fold(writer0)(n =>
@@ -190,7 +251,8 @@ object Exporter {
     timed("ex_write")(
       (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
         .parquet(outPath))
-    val valReport = Await.result(valReportF, Duration.Inf)
+    val valReport = separate.getOrElse(
+      validationReport(observation.get, hasOhlc(df), knownDistinctTs = true))
 
     var exportReport = Json.obj(
       "path" -> outPath,
@@ -344,12 +406,25 @@ object Exporter {
   }
 
   /** O21: append one JSON line per export. */
-  def appendExportLog(logDir: String, entry: ListMap[String, Any]): Unit = {
-    Files.createDirectories(Paths.get(logDir))
-    Files.writeString(Paths.get(logDir, "export_log.ndjson"),
-      Json.write(entry, indent = 0).replace("\n", " ") + "\n",
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
+  def appendExportLog(logDir: String, entry: ListMap[String, Any]): Unit =
+    appendExportLogBlock(logDir, Seq(entry))
+
+  /** Serializes every append to an export log in this JVM. */
+  private val ExportLogLock = new Object
+
+  /** Append `entries` as one contiguous block of lines, in order: one
+    * write under a JVM-wide lock, so concurrent pipelines (several files
+    * in flight) never interleave their entries.
+    */
+  def appendExportLogBlock(logDir: String,
+                           entries: Seq[ListMap[String, Any]]): Unit =
+    if (entries.nonEmpty) ExportLogLock.synchronized {
+      Files.createDirectories(Paths.get(logDir))
+      Files.writeString(Paths.get(logDir, "export_log.ndjson"),
+        entries.map(Json.write(_, indent = 0).replace("\n", " ") + "\n")
+          .mkString,
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    }
 
   /** The Morton (Z-order) key for two long columns already quantized to
     * 16 bits: bit i of `a` lands at bit 2i, bit i of `b` at 2i+1. Pure

@@ -6,7 +6,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.functions.{col, min, unix_micros}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -167,7 +167,7 @@ object FastFill {
     val seeds: Map[(Int, List[Any]), Seed] =
       if (crossPartition)
         buildSeeds(prepared, fIdx, iIdx, tsIdx, kIdx, types,
-          partitionCols, reindexStepMicros.get)
+          reindexStepMicros.get)
       else Map.empty
 
     // generic deep copy for the non-fast path (internal values cloned so
@@ -182,7 +182,7 @@ object FastFill {
       new GenericInternalRow(a)
     }
 
-    val inRdd = prepared.queryExecution.toRdd
+    val inRdd = graft.core.Scan.inSession(prepared)(prepared.queryExecution.toRdd)
     val filledRdd = inRdd.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       // write one internal value into a fixed-width slot (fast path) or a
@@ -434,8 +434,8 @@ object FastFill {
 
   /** Two fixed-size metadata jobs over the (cached) layout, then a driver
     * prefix/suffix scan — never row-shaped data:
-    *  1. per-series anchors (min stamp): one partial-aggregated groupBy,
-    *     one row per series;
+    *  1. per-series anchors (min stamp): a narrow scan emitting one record
+    *     per series-run, folded to one stamp per series;
     *  2. per-(partition, series) boundary summary: last on-grid stamp,
     *     last non-null per ffill col, first/last non-null per interp col —
     *     a narrow InternalRow scan over the same physical RDD as the fill
@@ -449,26 +449,53 @@ object FastFill {
   private def buildSeeds(prepared: DataFrame, fIdx: Array[Int],
                          iIdx: Array[Int], tsIdx: Int, kIdx: Array[Int],
                          types: Array[DataType],
-                         partitionCols: Seq[String],
                          stepUs: Long): Map[(Int, List[Any]), Seed] = {
     val nK = kIdx.length; val nF = fIdx.length; val nI = iIdx.length
 
-    // job 1: series anchors (external collect; key externalization in the
-    // summary job matches these values — `fill` checks the key types)
-    val tsCol = prepared.schema.fields(tsIdx).name
-    val anchors: Map[List[Any], Long] = prepared
-      .filter(col(tsCol).isNotNull)
-      .groupBy(partitionCols.map(col): _*)
-      .agg(min(unix_micros(col(tsCol))).as("_a"))
-      .collect()
-      .map(r => (0 until nK).map(r.get).toList -> r.getLong(nK))
-      .toMap
+    // planned and run in the session's scope, like the session's queries
+    // (graft.core.Scan.inSession): the classes they share compile once
+    def inSession[T](f: => T): T = graft.core.Scan.inSession(prepared)(f)
+    val rows = inSession(prepared.queryExecution.toRdd)
+    def sameKey(r: InternalRow, keyInt: Array[Any]): Boolean = {
+      if (keyInt == null) return false
+      var i = 0
+      while (i < nK) {
+        val ci = kIdx(i)
+        val v = if (r.isNullAt(ci)) null else r.get(ci, types(ci))
+        if (v != keyInt(i)) return false
+        i += 1
+      }
+      true
+    }
+    def ownedKey(r: InternalRow): Array[Any] =
+      kIdx.map(i => if (r.isNullAt(i)) null
+        else InternalRow.copyValue(r.get(i, types(i))))
+
+    // job 1: series anchors (min non-null stamp per series) — a narrow scan
+    // of the same RDD as job 2, keys externalized exactly as job 2 does;
+    // it generates no aggregation code
+    val anchors: Map[List[Any], Long] = inSession(rows.mapPartitions { it =>
+      val acc = ArrayBuffer.empty[(List[Any], Long)]
+      var keyInt: Array[Any] = null
+      var lo = Long.MaxValue
+      def flush(): Unit = if (keyInt != null && lo != Long.MaxValue)
+        acc += ((keyInt.map(externalizeKey).toList, lo))
+      while (it.hasNext) {
+        val r = it.next()
+        if (!r.isNullAt(tsIdx)) {
+          if (!sameKey(r, keyInt)) { flush(); keyInt = ownedKey(r); lo = Long.MaxValue }
+          lo = math.min(lo, r.getLong(tsIdx))
+        }
+      }
+      flush()
+      acc.iterator
+    }.collect()).groupMapReduce(_._1)(_._2)(math.min)
     val anchorsB = prepared.sparkSession.sparkContext.broadcast(anchors)
 
     // job 2: per-(partition, series) boundary summaries — plain RDD of a
     // small case class, no DataFrame/encoder detour
-    val summaries: Array[SeedSummary] =
-      prepared.queryExecution.toRdd.mapPartitions { it =>
+    val summaries: Array[SeedSummary] = inSession(
+      rows.mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
         val acc = ArrayBuffer.empty[SeedSummary]
         var key: List[Any] = null     // externalized, owned
@@ -481,26 +508,13 @@ object FastFill {
         var outV: Array[java.lang.Double] = null
         def flush(): Unit = if (key != null)
           acc += SeedSummary(pid, key, lastGrid, ff, inUs, inV, outUs, outV)
-        def sameKey(r: InternalRow): Boolean = {
-          if (keyInt == null) return false
-          var i = 0
-          while (i < nK) {
-            val ci = kIdx(i)
-            val v = if (r.isNullAt(ci)) null else r.get(ci, types(ci))
-            if (v != keyInt(i)) return false
-            i += 1
-          }
-          true
-        }
         while (it.hasNext) {
           val r = it.next()
           if (r.isNullAt(tsIdx)) { /* null stamps never repair */ }
           else {
-            if (!sameKey(r)) {
+            if (!sameKey(r, keyInt)) {
               flush()
-              keyInt = kIdx.map(i =>
-                if (r.isNullAt(i)) null
-                else InternalRow.copyValue(r.get(i, types(i))))
+              keyInt = ownedKey(r)
               key = keyInt.map(externalizeKey).toList
               lastGrid = null
               ff = new Array[Any](nF)
@@ -536,7 +550,7 @@ object FastFill {
         }
         flush()
         acc.iterator
-      }.collect()
+      }.collect())
 
     // driver fold: partition-ordered prefix (anchor, grid continuation,
     // ffill carry, interp carry-in) + suffix (interp carry-out) per series

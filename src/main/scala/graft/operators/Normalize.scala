@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   *
   * The whole transform is one lazy DataFrame graph; the report counters
   * (coercions, NaT counts, duplicate count) are gathered in a SINGLE
-  * aggregation job over the pre-dedup frame rather than one eager pass per
+  * scan job over the pre-dedup frame rather than one eager pass per
   * stage — same numbers, one scan.
   *
   * Scale notes: the only shuffle is the dedup window + final sort, keyed on
@@ -283,17 +283,27 @@ object Normalize {
       var coercions = ListMap.empty[String, Long]
       var removedDuplicates = 0L
       if (computeReport) {
-        val aggs =
-          Seq(count(lit(1)).as("_n"),
-            sum(when(col("_ts_parsed").isNull, 1).otherwise(0)).as("_parse_nat"),
-            sum(when(col(TsCol).isNull, 1).otherwise(0)).as("_loc_nat")) ++
-            numericCols.map(c =>
-              sum(when(col(c).isNull, 1).otherwise(0)).as(s"_nc_$c"))
-        val row = withTs.agg(aggs.head, aggs.tail: _*).collect()(0)
-        preDedupRows = row.getAs[Long]("_n")
-        coercedRows = row.getAs[Long]("_parse_nat")
-        ambiguousNats = row.getAs[Long]("_loc_nat")
-        coercions = ListMap(numericCols.map(c => c -> row.getAs[Long](s"_nc_$c")): _*)
+        // every counter is a row or null count: one narrow pass over the
+        // cached frame's own rows (no generated aggregation code)
+        val idx = ("_ts_parsed" +: TsCol +: numericCols)
+          .map(withTs.schema.fieldIndex).toArray
+        val counts = graft.core.Scan.partitions(withTs) { (_, it) =>
+          val a = new Array[Long](idx.length + 1)
+          while (it.hasNext) {
+            val r = it.next()
+            a(0) += 1
+            var i = 0
+            while (i < idx.length) { if (r.isNullAt(idx(i))) a(i + 1) += 1; i += 1 }
+          }
+          Iterator.single(a)
+        }.foldLeft(new Array[Long](idx.length + 1)) { (acc, a) =>
+          for (i <- acc.indices) acc(i) += a(i)
+          acc
+        }
+        preDedupRows = counts(0)
+        coercedRows = counts(1)
+        ambiguousNats = counts(2)
+        coercions = ListMap(numericCols.zip(counts.drop(3).toSeq): _*)
         // removed = preDedup - postDedup (pandas counts all-NaT stamps as
         // duplicates of each other too, which the stamp-keyed dedup mirrors)
         removedDuplicates = preDedupRows - postRows.getOrElse(deduped.count())

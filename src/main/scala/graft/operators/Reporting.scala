@@ -5,6 +5,9 @@ import scala.collection.immutable.ListMap
 import graft.core.Json
 import graft.sources.Readers
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+// Spark's double ordering (max/min/percentile): NaN above every number
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
@@ -12,20 +15,21 @@ import org.apache.spark.sql.types.NumericType
 /** Data-quality report + SMA indicator summaries (reference O15–O17:
   * src/etl/utils/reporting.py:26-142).
   *
-  * Cost shape: ONE whole-frame aggregation job for the profile (rows,
-  * extent, per-column NaNs, dup stamps, range stats, CLOSE stats + exact
-  * median) and, when indicators are on, one window+aggregate job for all
-  * SMA windows together. The reference runs ~10 separate pandas passes;
-  * both jobs here scan the frame once each. Reports are fixed-size driver
-  * aggregates — nothing row-shaped is ever collected.
+  * Cost shape: ONE scan over the frame computes the whole profile (rows,
+  * extent, per-column NaNs, range stats, CLOSE stats + exact median) and,
+  * on the Runner's sorted range layout, the SMA summaries too — one job
+  * where the reference runs ~10 separate pandas passes. Other layouts add
+  * one SMA job (a sorted single-series scan or a per-series window).
+  * Reports are fixed-size driver merges of per-partition partials.
   */
 object Reporting {
 
   val TsCol: String = Normalize.TsCol
 
-  /** Above this row count the CLOSE median switches from the built-in
-    * `median()` aggregate (merge state grows with distinct values) to
-    * ExactMedian's bounded histogram selection. Same exact value either
+  /** Above this row count the CLOSE median switches from exact value
+    * counts (the per-partition value→count maps that `median()` itself
+    * merges, here merged on the driver — state grows with distinct values)
+    * to ExactMedian's bounded histogram selection. Same exact value either
     * way — proven by ExactMedianSpec. Crossover measured on a cached
     * all-distinct column: at 600 k rows the in-agg `median()` costs
     * 1.5–1.9 s steady-state vs 0.45–0.55 s for the histogram path (whose
@@ -35,7 +39,7 @@ object Reporting {
 
   /** `knownDistinctTs`: callers holding a frame whose timestamps are
     * distinct by construction (anything post-dedup) can skip the
-    * countDistinct expand — the reported value is identically 0.
+    * distinct-count job — the reported value is identically 0.
     */
   def dataQualityReport(df: DataFrame,
                         computeIndicators: Boolean = true,
@@ -43,20 +47,20 @@ object Reporting {
                         partitionCols: Seq[String] = Nil,
                         knownDistinctTs: Boolean = false,
                         /** caller knows the keyed frame holds ONE series —
-                          * routes to the single-pass scan (exact median from
-                          * the sort, no percentile agg buffer, no window
+                          * routes to the single-pass scan (no window
                           * shuffle) without giving up the keyed API */
                         knownSingleSeries: Boolean = false,
                         /** input is RANGE-partitioned on (keys, ts) and
                           * sorted within partitions (Normalize's layout) —
-                          * SMA runs as a seeded parallel scan instead of a
+                          * SMA rides the profile scan, seeded across
+                          * partition boundaries on the driver, instead of a
                           * per-key window (which would re-serialize a hot
                           * symbol through one task) */
                         layoutSorted: Boolean = false,
                         /** row count the caller already holds (e.g. the
                           * Runner's cache-materialization count) — lets the
-                          * CLOSE-median path pick its implementation without
-                          * an extra count job */
+                          * CLOSE-median path pick its implementation before
+                          * the scan */
                         knownRows: Option[Long] = None): ListMap[String, Any] = {
 
     val cols = df.columns.filterNot(_ == Readers.FileOrderCol).toSeq
@@ -64,89 +68,64 @@ object Reporting {
     val hasHL = cols.contains("HIGH") && cols.contains("LOW")
     val hasClose = cols.contains("CLOSE")
     val singleSeries = partitionCols.isEmpty || knownSingleSeries
-
-    var aggs = Vector(
-      count(lit(1)).as("_rows"),
-      min(col(TsCol)).as("_start"),
-      max(col(TsCol)).as("_end"),
-      sum(when(col(TsCol).isNull, 1).otherwise(0)).as("_tsnull"))
-    if (!knownDistinctTs) aggs :+= countDistinct(col(TsCol)).as("_dts")
-    aggs ++= dataCols.map(c =>
-      sum(when(col(c).isNull, 1).otherwise(0)).as(s"_nan_$c"))
-    if (hasHL) {
-      val rng = col("HIGH") - col("LOW")
-      aggs :+= avg(rng).as("_mean_range")
-      aggs :+= max(rng).as("_max_range")
-    }
-    // exact CLOSE median, two implementations sharing the one agg pass:
-    //  - below ExactMedianRowThreshold: the median() aggregate —
-    //    partial-aggregated value counts merged on one reducer; fine while
-    //    the distinct-value map stays small
-    //  - above it: ExactMedian's histogram selection — median() merges
-    //    EVERY distinct value through one reducer (unbounded state on a
-    //    100 TB column), so large frames splice count/min/finite-max/NaN
-    //    stats into this same agg and locate the middle ranks with
-    //    fixed-size follow-up jobs
+    // exact CLOSE median, two implementations:
+    //  - below ExactMedianRowThreshold: exact value counts from the scan
+    //  - above it: ExactMedian's histogram selection — value counts grow
+    //    with EVERY distinct value (unbounded on a 100 TB column), so large
+    //    frames take count/min/finite-max/NaN stats from the scan and
+    //    locate the middle ranks with fixed-size follow-up jobs
     // provisional, from the caller-claimed TOTAL row count — the real gate
-    // is the non-null CLOSE count (_cn), known only after the agg runs, so
-    // frames claimed large get the cheap histogram stat columns here and
-    // the final histogram-vs-median() choice is made post-agg
+    // is the non-null CLOSE count, known only after the scan, so frames
+    // claimed large skip the value counts here and the final
+    // histogram-vs-median() choice is made post-scan
     val maybeExactMedian = hasClose &&
       knownRows.exists(_ > ExactMedianRowThreshold)
-    if (hasClose) {
-      aggs :+= min(col("CLOSE")).as("_cmin")
-      aggs :+= max(col("CLOSE")).as("_cmax")
-      aggs :+= count(col("CLOSE")).as("_cn")
-      if (maybeExactMedian) {
-        val cd = col("CLOSE").cast("double")
-        aggs :+= max(when(isnan(cd), lit(null)).otherwise(cd)).as("_cmaxf")
-        aggs :+= sum(when(isnan(cd), 1L).otherwise(0L)).as("_cnan")
-      } else aggs :+= median(col("CLOSE")).as("_cmed")
-    }
+    val fusedSma = computeIndicators && hasClose && layoutSorted && !singleSeries
     val t0 = System.nanoTime()
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val (p, fusedIndicators) = profileScan(df, dataCols, hasHL, hasClose,
+      closeValues = hasClose && !maybeExactMedian,
+      smaWindows = if (fusedSma) smaWindows else Nil, partitionCols)
     if (sys.env.get("GRAFT_TIMING").contains("1"))
-      System.err.println(f"[graft-timing] qr_profile_agg ${(System.nanoTime()-t0)/1e9}%8.2f s")
+      System.err.println(f"[graft-timing] qr_profile_scan ${(System.nanoTime()-t0)/1e9}%8.2f s")
 
-    def opt[T](name: String): Option[T] =
-      if (r.isNullAt(r.fieldIndex(name))) None else Some(r.getAs[T](name))
-
-    val rows = r.getAs[Long]("_rows")
+    val rows = p.rows
     val dups =
       if (knownDistinctTs) 0L
-      else rows - r.getAs[Long]("_dts") -
-        (if (r.getAs[Long]("_tsnull") > 0) 1 else 0)
+      else rows - df.agg(countDistinct(col(TsCol))).collect()(0).getLong(0) -
+        (if (p.tsNull > 0) 1 else 0)
+    def ts(micros: Long): String =
+      if (micros == Long.MaxValue || micros == Long.MinValue) null
+      else fmtTs(DateTimeUtils.toJavaTimestamp(micros))
 
     var report = Json.obj(
       "rows" -> rows,
-      "start" -> opt[java.sql.Timestamp]("_start").map(t => fmtTs(t)).orNull,
-      "end" -> opt[java.sql.Timestamp]("_end").map(t => fmtTs(t)).orNull,
+      "start" -> ts(p.tsMin),
+      "end" -> ts(p.tsMax),
       "columns" -> dataCols,
-      "nans_per_column" -> ListMap(dataCols.map(c =>
-        c -> r.getAs[Long](s"_nan_$c")): _*),
+      "nans_per_column" -> ListMap(dataCols.zip(p.nulls.toSeq): _*),
       "dups_timestamps" -> dups,
       "candles_count" -> rows,
-      "mean_range" -> (if (hasHL) opt[Double]("_mean_range").orNull else null),
-      "max_range" -> (if (hasHL) opt[Double]("_max_range").orNull else null))
+      "mean_range" -> (if (hasHL && p.rngN > 0) p.rngSum / p.rngN else null),
+      "max_range" -> (if (hasHL) p.rngMax else null))
 
     // CLOSE stats + the reference's outlier heuristic (reporting.py:68-104)
-    if (hasClose && r.getAs[Long]("_cn") > 0) {
-      val cmin = r.getAs[Double]("_cmin")
-      val cmax = r.getAs[Double]("_cmax")
+    if (hasClose && p.cN > 0) {
+      val cmin = p.cMin.doubleValue
+      val cmax = p.cMax.doubleValue
       val cmed =
         if (maybeExactMedian) {
-          if (r.getAs[Long]("_cn") > ExactMedianRowThreshold)
+          if (p.cN > ExactMedianRowThreshold)
             graft.functions.ExactMedian.median(df, "CLOSE",
-              n = r.getAs[Long]("_cn"), lo = cmin,
-              hiFinite = opt[Double]("_cmaxf").getOrElse(Double.NaN),
-              nNaN = r.getAs[Long]("_cnan")).getOrElse(Double.NaN)
+              n = p.cN, lo = cmin,
+              hiFinite = Option(p.cMaxFinite).fold(Double.NaN)(_.doubleValue),
+              nNaN = p.cNaN).getOrElse(Double.NaN)
           else
             // the frame is large but its non-null CLOSE count is below the
             // crossover: one small median() job (merge state bounded by
-            // _cn distinct values) beats the histogram path's two
-            // full-frame selection scans
+            // the non-null count's distinct values) beats the histogram
+            // path's two full-frame selection scans
             df.agg(median(col("CLOSE"))).collect()(0).getDouble(0)
-        } else r.getAs[Double]("_cmed")
+        } else exactMedian(p.closeCounts, p.cN)
       val ratios =
         if (cmed != 0.0) Some((cmax / cmed, cmin / cmed)) else None
       val suspicious = ratios.exists { case (rx, rn) => rx > 100 || rn < 0.01 }
@@ -167,18 +146,17 @@ object Reporting {
     if (computeIndicators && hasClose && rows > 0) {
       val t1 = System.nanoTime()
       indicators =
-        if (singleSeries) smaSummariesSinglePass(df, smaWindows)
-        else if (layoutSorted) smaSummariesChunked(df, smaWindows, partitionCols)
+        if (fusedSma) fusedIndicators
+        else if (singleSeries) smaSummariesSinglePass(df, smaWindows)
         else smaSummariesWindowed(df, smaWindows, partitionCols)
       if (sys.env.get("GRAFT_TIMING").contains("1"))
         System.err.println(f"[graft-timing] qr_sma_agg ${(System.nanoTime()-t1)/1e9}%8.2f s")
     }
     report += "indicators" -> indicators
 
-    val nanTotal = ListMap(dataCols.map(c => c -> r.getAs[Long](s"_nan_$c")): _*)
     var notes = Vector.empty[String]
     if (dups > 0) notes :+= s"$dups duplicated timestamps"
-    if (nanTotal.values.exists(_ > 0)) notes :+= "There are NaNs in some columns"
+    if (p.nulls.exists(_ > 0)) notes :+= "There are NaNs in some columns"
     if (report("suspicious_price_jump") == true)
       notes :+= "Suspicious price jump detected (check max/min vs median)"
     report += "notes" -> notes
@@ -186,256 +164,358 @@ object Reporting {
     report
   }
 
-  /** Per-scan SMA partial for one (partition, series): fixed-size driver
-    * records collected off an `InternalRow` scan — the scans below never
-    * cross the external-Row encoder (boxing 60M rows per pass measured as
-    * the quality report's dominant cost at the 100× probe scale).
+  /** Exact `percentile(CLOSE, 0.5)` from value counts, with Spark's
+    * interpolation formula (not ExactMedian's average) so the value is
+    * bit-identical to the `median()` aggregate.
     */
-  private final case class SmaPartial(
-      pid: Int, key: List[Any],
-      lasts: Array[java.lang.Double], lastTs: Array[java.lang.Long],
-      nans: Array[Long],
-      mins: Array[java.lang.Double], maxs: Array[java.lang.Double])
-
-  /** Rolling-mean summaries for a single series in ONE sorted scan —
-    * min_periods=1 semantics (value = mean of non-null entries in the
-    * trailing window; null only when the whole window is null). A sliding
-    * window over a single symbol serializes onto one task anyway, so a
-    * ring-buffer scan beats a WindowExec sort+frame evaluation. Task memory
-    * is bounded by max(smaWindows) ring slots — never by series length.
-    * The scan runs over `queryExecution.toRdd` with primitive ring slots:
-    * no per-row objects at all.
-    */
-  private def smaSummariesSinglePass(df: DataFrame, smaWindows: Seq[Int])
-      : ListMap[String, Any] = {
-    val ws = smaWindows.toArray
-    val maxW = ws.max
-    val partials = df.select(col(TsCol), col("CLOSE"))
-      .coalesce(1)
-      .sortWithinPartitions(col(TsCol).asc_nulls_last)
-      .queryExecution.toRdd.mapPartitions { it =>
-        val k = ws.length
-        val ringV = Array.fill(k)(new Array[Double](maxW))
-        val ringP = Array.fill(k)(new Array[Boolean](maxW))
-        val sums = new Array[Double](k)
-        val counts = new Array[Int](k)
-        val nans = new Array[Long](k)
-        val mins = Array.fill(k)(Double.MaxValue)
-        val maxs = Array.fill(k)(Double.MinValue)
-        val lasts = new Array[java.lang.Double](k)
-        var n = 0L
-        while (it.hasNext) {
-          val r = it.next()
-          val present = !r.isNullAt(1)
-          val v = if (present) r.getDouble(1) else 0.0
-          var j = 0
-          while (j < k) {
-            val w = ws(j)
-            val slot = (n % w).toInt
-            if (ringP(j)(slot)) { sums(j) -= ringV(j)(slot); counts(j) -= 1 }
-            ringV(j)(slot) = v
-            ringP(j)(slot) = present
-            if (present) { sums(j) += v; counts(j) += 1 }
-            if (counts(j) == 0) nans(j) += 1
-            else {
-              val sma = sums(j) / counts(j)
-              lasts(j) = sma
-              if (sma < mins(j)) mins(j) = sma
-              if (sma > maxs(j)) maxs(j) = sma
-            }
-            j += 1
-          }
-          n += 1
-        }
-        Iterator.single(SmaPartial(0, Nil, lasts, null, nans,
-          ws.indices.map(j => if (mins(j) != Double.MaxValue)
-            java.lang.Double.valueOf(mins(j)) else null).toArray,
-          ws.indices.map(j => if (maxs(j) != Double.MinValue)
-            java.lang.Double.valueOf(maxs(j)) else null).toArray))
-      }.collect()
-    val sr = partials(0)
-    ListMap(ws.toIndexedSeq.zipWithIndex.map { case (w, j) =>
-      s"SMA_$w" -> Json.obj(
-        "last" -> sr.lasts(j), "nan_count" -> sr.nans(j),
-        "min" -> sr.mins(j), "max" -> sr.maxs(j))
-    }: _*)
+  private def exactMedian(counts: java.util.HashMap[java.lang.Double, java.lang.Long],
+                          n: Long): Double = {
+    import scala.jdk.CollectionConverters._
+    val sorted = counts.asScala.toArray.sortWith((a, b) => compareDoubles(a._1, b._1) < 0)
+    val position = (n - 1) * 0.5
+    val lower = position.floor.toLong
+    val higher = position.ceil.toLong
+    def at(rank: Long): Double = {
+      var cum = 0L
+      var i = 0
+      while (cum + sorted(i)._2 <= rank) { cum += sorted(i)._2; i += 1 }
+      sorted(i)._1
+    }
+    val lo = at(lower)
+    if (higher == lower) lo
+    else {
+      val hi = at(higher)
+      if (lo.equals(hi)) lo
+      else (higher - position) * lo + (position - lower) * hi
+    }
   }
 
-  /** SMA summaries over the RANGE layout: a series spans consecutive
-    * ordered partitions, so the ring-buffer scan runs per partition in
-    * parallel, primed with the previous partitions' trailing CLOSE values
-    * (a trailing window of w rows only ever needs the last w-1 predecessor
-    * rows). Two narrow jobs: a tail-collection pass (≤ maxW-1 values per
-    * (partition, series) — fixed-size metadata, never row-shaped data) and
-    * the seeded scan emitting per-(partition, series) partials merged on
-    * the driver. Exactly the windowed form's numbers, no key-alone shuffle.
+  /** One partition's share of the profile. */
+  private final class ProfilePartial(nData: Int) extends Serializable {
+    var rows = 0L
+    var tsNull = 0L
+    var tsMin = Long.MaxValue
+    var tsMax = Long.MinValue
+    val nulls = new Array[Long](nData)
+    var rngSum = 0.0
+    var rngN = 0L
+    var rngMax: java.lang.Double = null
+    var cN = 0L
+    var cMin: java.lang.Double = null
+    var cMax: java.lang.Double = null
+    var cMaxFinite: java.lang.Double = null
+    var cNaN = 0L
+    var closeCounts: java.util.HashMap[java.lang.Double, java.lang.Long] = null
+    var sma: SmaPartial = null
+
+    def merge(o: ProfilePartial): Unit = {
+      rows += o.rows; tsNull += o.tsNull
+      tsMin = math.min(tsMin, o.tsMin); tsMax = math.max(tsMax, o.tsMax)
+      for (i <- nulls.indices) nulls(i) += o.nulls(i)
+      rngSum += o.rngSum; rngN += o.rngN
+      rngMax = maxOf(rngMax, o.rngMax)
+      cN += o.cN; cNaN += o.cNaN
+      cMin = minOf(cMin, o.cMin); cMax = maxOf(cMax, o.cMax)
+      cMaxFinite = maxOf(cMaxFinite, o.cMaxFinite)
+      if (closeCounts != null)
+        o.closeCounts.forEach((v, c) => closeCounts.merge(v, c, (a, b) => a + b))
+    }
+  }
+  private def maxOf(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
+    if (a == null) b else if (b == null || compareDoubles(b, a) <= 0) a else b
+  private def minOf(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
+    if (a == null) b else if (b == null || compareDoubles(b, a) >= 0) a else b
+
+  /** The report scan: one narrow job over the frame's own rows
+    * (`queryExecution.toRdd`) — no per-row objects, no shuffle, and no
+    * generated aggregation code. Each partition returns a fixed-size partial
+    * (plus, below the median crossover, its CLOSE value counts); the
+    * driver merges them in partition order, as Spark's aggregate merges
+    * its partial sums.
+    *
+    * With `smaWindows` non-empty the input must be Normalize's range
+    * layout: each partition runs the ring-buffer SMA over its series runs.
+    * Only a partition's FIRST run can continue a series from the previous
+    * partition, and only its first `w - 1` rows have windows reaching back
+    * there — those rows are deferred: the partition returns them (at most
+    * `max(w) - 1` values) with its last run's trailing values, and the
+    * driver evaluates them against the predecessors' trailing values.
     */
-  private def smaSummariesChunked(df: DataFrame, smaWindows: Seq[Int],
-                                  partitionCols: Seq[String]): ListMap[String, Any] = {
-    import org.apache.spark.TaskContext
-    import org.apache.spark.sql.catalyst.InternalRow
-    val ws = smaWindows.toArray
-    val maxW = ws.max
-    val schema = df.schema
-    val types = schema.fields.map(_.dataType)
-    val kIdx = partitionCols.map(schema.fieldIndex).toArray
+  private def profileScan(df: DataFrame, dataCols: Seq[String],
+                          hasHL: Boolean, hasClose: Boolean,
+                          closeValues: Boolean, smaWindows: Seq[Int],
+                          partitionCols: Seq[String])
+      : (ProfilePartial, ListMap[String, Any]) = {
+    // the price columns are read as doubles: cast any that are not (a
+    // frame whose prices already are — every pipeline frame — is scanned
+    // as is, so the scan adds no generated code beyond the cache's own
+    // row iterator)
+    val priceCols = Seq("CLOSE", "HIGH", "LOW").filter(df.columns.contains)
+    val src = df.withColumns(priceCols
+      .filter(c => df.schema(c).dataType != org.apache.spark.sql.types.DoubleType)
+      .map(c => c -> col(c).cast("double")).toMap)
+    val schema = src.schema
     val tsIdx = schema.fieldIndex(TsCol)
-    val cIdx = schema.fieldIndex("CLOSE")
-    val nK = kIdx.length
-    // both passes run on the SAME physical RDD of the (cached) layout —
-    // partition ids are consistent by construction, and neither pass
-    // crosses the external-Row encoder (internal values: a timestamp is a
-    // bare long of epoch micros)
-    val inRdd = df.queryExecution.toRdd
-    // series-key helpers shared by the two scans: runs are detected on
-    // owned internal values, map keys externalized once per run (the
-    // FastFill seed-key convention — string/integral keys)
-    def keyInternal(r: InternalRow): Array[Any] =
-      kIdx.map(i => if (r.isNullAt(i)) null
-        else InternalRow.copyValue(r.get(i, types(i))))
-    def externalize(a: Array[Any]): List[Any] = a.map {
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case x => x
-    }.toList
-    def sameKey(r: InternalRow, k: Array[Any]): Boolean = {
-      if (k == null) return false
+    val cIdx = if (hasClose) schema.fieldIndex("CLOSE") else -1
+    val (hIdx, lIdx) =
+      if (hasHL) (schema.fieldIndex("HIGH"), schema.fieldIndex("LOW")) else (-1, -1)
+    val nullIdx = dataCols.map(schema.fieldIndex).toArray
+    val nData = nullIdx.length
+    val keys = if (smaWindows.nonEmpty) partitionCols else Nil
+    val kTypes = keys.map(k => schema(k).dataType).toArray
+    val kIdx = keys.map(schema.fieldIndex).toArray
+    val ws = smaWindows.toArray
+    val partials = graft.core.Scan.partitions(src) { (_, it) =>
+      val p = new ProfilePartial(nData)
+      if (closeValues) p.closeCounts = new java.util.HashMap()
+      val sma = if (ws.nonEmpty) new SmaScan(ws, kIdx, kTypes) else null
+      while (it.hasNext) {
+        val r = it.next()
+        p.rows += 1
+        val tsP = !r.isNullAt(tsIdx)
+        val ts = if (tsP) r.getLong(tsIdx) else 0L
+        if (tsP) {
+          if (ts < p.tsMin) p.tsMin = ts
+          if (ts > p.tsMax) p.tsMax = ts
+        } else p.tsNull += 1
+        var i = 0
+        while (i < nData) { if (r.isNullAt(nullIdx(i))) p.nulls(i) += 1; i += 1 }
+        if (hIdx >= 0 && !r.isNullAt(hIdx) && !r.isNullAt(lIdx)) {
+          val v = r.getDouble(hIdx) - r.getDouble(lIdx)
+          p.rngSum += v; p.rngN += 1
+          if (p.rngMax == null || compareDoubles(v, p.rngMax) > 0) p.rngMax = v
+        }
+        val cP = cIdx >= 0 && !r.isNullAt(cIdx)
+        val c = if (cP) r.getDouble(cIdx) else 0.0
+        if (cP) {
+          p.cN += 1
+          if (p.cMin == null || compareDoubles(c, p.cMin) < 0) p.cMin = c
+          if (p.cMax == null || compareDoubles(c, p.cMax) > 0) p.cMax = c
+          if (c.isNaN) p.cNaN += 1
+          else if (p.cMaxFinite == null || c > p.cMaxFinite) p.cMaxFinite = c
+          if (p.closeCounts != null)
+            p.closeCounts.merge(c, 1L, (a, b) => a + b)
+        }
+        if (sma != null) sma.push(r, cP, c, tsP, ts)
+      }
+      if (sma != null) p.sma = sma.result()
+      Iterator.single(p)
+    }
+    val merged = new ProfilePartial(nData)
+    if (closeValues) merged.closeCounts = new java.util.HashMap()
+    partials.foreach(merged.merge)
+    (merged,
+      if (ws.isEmpty) ListMap.empty else mergeSma(ws, partials.map(_.sma)))
+  }
+
+  /** A partition's SMA share: per-window stats over its non-deferred rows,
+    * its first run's deferred head and its last run's trailing values
+    * (both as (present, value) slots, oldest first).
+    */
+  private final case class SmaPartial(
+      firstKey: List[Any], firstRunLen: Long,
+      headP: Array[Boolean], headV: Array[Double],
+      headTsP: Array[Boolean], headTs: Array[Long],
+      lastKey: List[Any], lastIsFirst: Boolean,
+      tailP: Array[Boolean], tailV: Array[Double],
+      nans: Array[Long], mins: Array[Double], maxs: Array[Double],
+      lasts: Array[java.lang.Double], lastTs: Array[java.lang.Long])
+
+  /** Per-partition ring-buffer SMA over series runs — min_periods=1
+    * semantics (value = mean of the non-null entries of the trailing
+    * window; null only when the whole window is null). Primitive ring
+    * slots, no per-row allocation; task memory is bounded by max(w).
+    */
+  private final class SmaScan(ws: Array[Int], kIdx: Array[Int],
+                              kTypes: Array[org.apache.spark.sql.types.DataType]) {
+    import org.apache.spark.sql.catalyst.InternalRow
+    private val k = ws.length
+    private val maxW = ws.max
+    private val h = maxW - 1
+    private val ringV = Array.fill(k)(new Array[Double](maxW))
+    private val ringP = Array.fill(k)(new Array[Boolean](maxW))
+    private val sums = new Array[Double](k)
+    private val counts = new Array[Int](k)
+    private val nans = new Array[Long](k)
+    private val mins = Array.fill(k)(Double.MaxValue)
+    private val maxs = Array.fill(k)(Double.MinValue)
+    private val lasts = new Array[java.lang.Double](k)
+    private val lastTs = new Array[java.lang.Long](k)
+    private val headP = new Array[Boolean](h)
+    private val headV = new Array[Double](h)
+    private val headTsP = new Array[Boolean](h)
+    private val headTs = new Array[Long](h)
+    private val tailP = new Array[Boolean](math.max(h, 1))
+    private val tailV = new Array[Double](math.max(h, 1))
+    private var key: Array[Any] = null
+    private var firstKey: List[Any] = null
+    private var run = -1
+    private var n = 0L
+    private var firstRunLen = 0L
+
+    private def sameKey(r: InternalRow): Boolean = {
+      if (key == null) return false
       var i = 0
-      while (i < nK) {
+      while (i < kIdx.length) {
         val ci = kIdx(i)
-        val v = if (r.isNullAt(ci)) null else r.get(ci, types(ci))
-        if (v != k(i)) return false
+        val v = if (r.isNullAt(ci)) null else r.get(ci, kTypes(i))
+        if (v != key(i)) return false
         i += 1
       }
       true
     }
 
-    // pass 1: per-(partition, series) trailing values (nulls included — the
-    // ring counts null entries as window slots, exactly like rowsBetween)
-    val tails: Array[(Int, List[Any], Array[java.lang.Double])] =
-      inRdd.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        val acc = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, List[Any], Array[java.lang.Double])]
-        var keyInt: Array[Any] = null
-        var buf: scala.collection.mutable.ArrayDeque[java.lang.Double] = null
-        def flush(): Unit = if (keyInt != null)
-          acc += ((pid, externalize(keyInt), buf.toArray))
+    def push(r: InternalRow, present: Boolean, v: Double,
+             tsP: Boolean, ts: Long): Unit = {
+      if (!sameKey(r)) {
+        key = kIdx.indices.map(i => if (r.isNullAt(kIdx(i))) null
+          else InternalRow.copyValue(r.get(kIdx(i), kTypes(i)))).toArray
+        run += 1
+        if (run == 0) firstKey = externalize(key)
+        ringP.foreach(a => java.util.Arrays.fill(a, false))
+        java.util.Arrays.fill(sums, 0.0); java.util.Arrays.fill(counts, 0)
+        n = 0L
+      }
+      val deferredRow = run == 0 && n < h
+      if (deferredRow) {
+        val i = n.toInt
+        headP(i) = present; headV(i) = v; headTsP(i) = tsP; headTs(i) = ts
+      }
+      var j = 0
+      while (j < k) {
+        val w = ws(j)
+        val slot = (n % w).toInt
+        if (ringP(j)(slot)) { sums(j) -= ringV(j)(slot); counts(j) -= 1 }
+        ringV(j)(slot) = v
+        ringP(j)(slot) = present
+        if (present) { sums(j) += v; counts(j) += 1 }
+        if (!(run == 0 && n < w - 1)) {
+          if (counts(j) == 0) nans(j) += 1
+          else {
+            val sma = sums(j) / counts(j)
+            if (tsP && (lastTs(j) == null || ts > lastTs(j))) {
+              lasts(j) = sma; lastTs(j) = ts
+            }
+            if (sma < mins(j)) mins(j) = sma
+            if (sma > maxs(j)) maxs(j) = sma
+          }
+        }
+        j += 1
+      }
+      if (h > 0) {
+        val slot = (n % h).toInt
+        tailP(slot) = present; tailV(slot) = v
+      }
+      n += 1
+      if (run == 0) firstRunLen = n
+    }
+
+    def result(): SmaPartial =
+      if (key == null) null
+      else {
+        // unroll the tail ring, oldest first
+        val len = math.min(n, h.toLong).toInt
+        val start = if (n <= h) 0 else (n % h).toInt
+        val head = math.min(firstRunLen, h.toLong).toInt
+        SmaPartial(firstKey, firstRunLen,
+          headP.take(head), headV.take(head), headTsP.take(head),
+          headTs.take(head), externalize(key), run == 0,
+          Array.tabulate(len)(i => tailP((start + i) % h)),
+          Array.tabulate(len)(i => tailV((start + i) % h)),
+          nans, mins, maxs, lasts, lastTs)
+      }
+  }
+
+  /** Series key as driver-side map keys: strings externalized, integral
+    * keys as is (the FastFill seed-key convention).
+    */
+  private def externalize(a: Array[Any]): List[Any] = a.map {
+    case u: org.apache.spark.unsafe.types.UTF8String => u.toString
+    case x => x
+  }.toList
+
+  /** Driver merge of the SMA partials, in partition order: each
+    * partition's deferred head rows are evaluated against the trailing
+    * values its series carried out of the previous partitions, then the
+    * partition's own stats fold in. `last` is the SMA at the latest stamp
+    * (first such row in layout order on ties) — the windowed form's
+    * `max_by(sma, ts)`.
+    */
+  private def mergeSma(ws: Array[Int], partials: Array[SmaPartial])
+      : ListMap[String, Any] = {
+    val h = ws.max - 1
+    val k = ws.length
+    val nans = new Array[Long](k)
+    val mins = new Array[java.lang.Double](k)
+    val maxs = new Array[java.lang.Double](k)
+    val lasts = new Array[java.lang.Double](k)
+    val lastTs = new Array[java.lang.Long](k)
+    def emit(j: Int, sma: java.lang.Double, tsP: Boolean, ts: Long): Unit =
+      if (sma == null) nans(j) += 1
+      else {
+        if (tsP && (lastTs(j) == null || ts > lastTs(j))) {
+          lasts(j) = sma; lastTs(j) = ts
+        }
+        if (mins(j) == null || sma < mins(j)) mins(j) = sma
+        if (maxs(j) == null || sma > maxs(j)) maxs(j) = sma
+      }
+    // trailing (present, value) slots of each series seen so far
+    val carry = scala.collection.mutable.Map.empty[List[Any], Vector[(Boolean, Double)]]
+    for (p <- partials if p != null) {
+      val before = carry.getOrElse(p.firstKey, Vector.empty)
+      val head = p.headP.indices.map(i => (p.headP(i), p.headV(i))).toVector
+      val seq = before ++ head
+      for (i <- head.indices; j <- 0 until k if i < ws(j) - 1) {
+        val pos = before.length + i
+        val win = seq.slice(math.max(0, pos - ws(j) + 1), pos + 1).filter(_._1)
+        emit(j, if (win.isEmpty) null
+          else java.lang.Double.valueOf(win.map(_._2).sum / win.length),
+          p.headTsP(i), p.headTs(i))
+      }
+      for (j <- 0 until k) {
+        nans(j) += p.nans(j)
+        if (p.lasts(j) != null) emit(j, p.lasts(j), tsP = true, p.lastTs(j))
+        if (p.mins(j) != Double.MaxValue &&
+            (mins(j) == null || p.mins(j) < mins(j))) mins(j) = p.mins(j)
+        if (p.maxs(j) != Double.MinValue &&
+            (maxs(j) == null || p.maxs(j) > maxs(j))) maxs(j) = p.maxs(j)
+      }
+      val tail = p.tailP.indices.map(i => (p.tailP(i), p.tailV(i))).toVector
+      carry(p.lastKey) =
+        if (p.lastIsFirst && p.firstRunLen <= h) seq.takeRight(h) else tail
+    }
+    ListMap(ws.toIndexedSeq.zipWithIndex.map { case (w, j) =>
+      s"SMA_$w" -> Json.obj(
+        "last" -> lasts(j), "nan_count" -> nans(j),
+        "min" -> mins(j), "max" -> maxs(j))
+    }: _*)
+  }
+
+  /** Rolling-mean summaries for a single series in ONE sorted scan —
+    * min_periods=1 semantics. A sliding window over a single symbol
+    * serializes onto one task anyway, so a ring-buffer scan beats a
+    * WindowExec sort+frame evaluation. Task memory is bounded by
+    * max(smaWindows) ring slots — never by series length. The scan runs
+    * over `queryExecution.toRdd` with primitive ring slots: no per-row
+    * objects at all.
+    */
+  private def smaSummariesSinglePass(df: DataFrame, smaWindows: Seq[Int])
+      : ListMap[String, Any] = {
+    val ws = smaWindows.toArray
+    val partials = df.select(col(TsCol), col("CLOSE").cast("double"))
+      .coalesce(1)
+      .sortWithinPartitions(col(TsCol).asc_nulls_last)
+      .queryExecution.toRdd.mapPartitions { it =>
+        val scan = new SmaScan(ws, Array.empty, Array.empty)
         while (it.hasNext) {
           val r = it.next()
-          if (!sameKey(r, keyInt)) {
-            flush(); keyInt = keyInternal(r)
-            buf = scala.collection.mutable.ArrayDeque.empty
-          }
-          buf += (if (r.isNullAt(cIdx)) null
-                  else java.lang.Double.valueOf(r.getDouble(cIdx)))
-          if (buf.length > maxW - 1) buf.removeHead()
+          val present = !r.isNullAt(1)
+          scan.push(r, present, if (present) r.getDouble(1) else 0.0,
+            !r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0))
         }
-        flush()
-        acc.iterator
+        Iterator.single(scan.result())
       }.collect()
-
-    // driver: carry-in per (partition, series) = last maxW-1 values of the
-    // concatenated predecessor tails
-    val carries = scala.collection.mutable.Map.empty[(Int, List[Any]), Array[java.lang.Double]]
-    for ((k, runs) <- tails.groupBy(_._2)) {
-      var run = Vector.empty[java.lang.Double]
-      for ((pid, _, tail) <- runs.sortBy(_._1)) {
-        carries((pid, k)) = run.toArray
-        run = (run ++ tail).takeRight(maxW - 1)
-      }
-    }
-    val seeds = carries.toMap
-
-    // pass 2: seeded ring scan, per-(partition, series) partials —
-    // primitive ring slots (value + present), no per-row allocation
-    val partials: Array[SmaPartial] = inRdd.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val acc = scala.collection.mutable.ArrayBuffer.empty[SmaPartial]
-      val k = ws.length
-      var keyInt: Array[Any] = null
-      val ringV = Array.fill(k)(new Array[Double](maxW))
-      val ringP = Array.fill(k)(new Array[Boolean](maxW))
-      val sums = new Array[Double](k); val counts = new Array[Int](k)
-      val nans = new Array[Long](k)
-      val mins = new Array[Double](k); val maxs = new Array[Double](k)
-      val lasts = new Array[java.lang.Double](k)
-      val lastTs = new Array[java.lang.Long](k)
-      var n = 0L
-      def push(present: Boolean, v: Double, emit: Boolean,
-               tsPresent: Boolean, ts: Long): Unit = {
-        var j = 0
-        while (j < k) {
-          val w = ws(j)
-          val slot = (n % w).toInt
-          if (ringP(j)(slot)) { sums(j) -= ringV(j)(slot); counts(j) -= 1 }
-          ringV(j)(slot) = v
-          ringP(j)(slot) = present
-          if (present) { sums(j) += v; counts(j) += 1 }
-          if (emit) {
-            if (counts(j) == 0) nans(j) += 1
-            else {
-              val sma = sums(j) / counts(j)
-              if (tsPresent) { lasts(j) = sma; lastTs(j) = ts }
-              if (sma < mins(j)) mins(j) = sma
-              if (sma > maxs(j)) maxs(j) = sma
-            }
-          }
-          j += 1
-        }
-        n += 1
-      }
-      def flush(): Unit = if (keyInt != null)
-        acc += SmaPartial(pid, externalize(keyInt),
-          lasts.clone(), lastTs.clone(), nans.clone(),
-          ws.indices.map(j => if (mins(j) != Double.MaxValue)
-            java.lang.Double.valueOf(mins(j)) else null).toArray,
-          ws.indices.map(j => if (maxs(j) != Double.MinValue)
-            java.lang.Double.valueOf(maxs(j)) else null).toArray)
-      while (it.hasNext) {
-        val r = it.next()
-        if (!sameKey(r, keyInt)) {
-          flush(); keyInt = keyInternal(r)
-          ringP.foreach(a => java.util.Arrays.fill(a, false))
-          java.util.Arrays.fill(sums, 0.0); java.util.Arrays.fill(counts, 0)
-          java.util.Arrays.fill(nans, 0L)
-          java.util.Arrays.fill(mins, Double.MaxValue)
-          java.util.Arrays.fill(maxs, Double.MinValue)
-          java.util.Arrays.fill(lasts.asInstanceOf[Array[AnyRef]], null)
-          java.util.Arrays.fill(lastTs.asInstanceOf[Array[AnyRef]], null)
-          n = 0L
-          for (c <- seeds.getOrElse((pid, externalize(keyInt)),
-              Array.empty[java.lang.Double]))
-            push(c != null, if (c != null) c.doubleValue() else 0.0,
-              emit = false, tsPresent = false, 0L)
-        }
-        val present = !r.isNullAt(cIdx)
-        val tsP = !r.isNullAt(tsIdx)
-        push(present, if (present) r.getDouble(cIdx) else 0.0,
-          emit = true, tsP, if (tsP) r.getLong(tsIdx) else 0L)
-      }
-      flush()
-      acc.iterator
-    }.collect()
-
-    // merge: nans sum; min/max fold; last = value at the latest non-null-SMA
-    // timestamp (the windowed form's max_by(sma, ts))
-    ListMap(ws.toIndexedSeq.zipWithIndex.map { case (w, j) =>
-      var last: Any = null; var lastT = Long.MinValue
-      var nan = 0L
-      var mn: Any = null; var mx: Any = null
-      for (p <- partials) {
-        if (p.lasts(j) != null && p.lastTs(j) != null && p.lastTs(j) > lastT) {
-          lastT = p.lastTs(j); last = p.lasts(j)
-        }
-        nan += p.nans(j)
-        if (p.mins(j) != null &&
-            (mn == null || p.mins(j) < mn.asInstanceOf[Double])) mn = p.mins(j)
-        if (p.maxs(j) != null &&
-            (mx == null || p.maxs(j) > mx.asInstanceOf[Double])) mx = p.maxs(j)
-      }
-      s"SMA_$w" -> Json.obj(
-        "last" -> last, "nan_count" -> nan, "min" -> mn, "max" -> mx)
-    }: _*)
+    mergeSma(ws, partials)
   }
 
   /** Multi-series SMA summaries via per-series windows (the declarative

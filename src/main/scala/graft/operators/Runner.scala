@@ -5,6 +5,7 @@ import scala.collection.immutable.ListMap
 import graft.core.{GraftConfig, Json, Rules}
 import graft.sources.Readers
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -58,16 +59,14 @@ object Runner {
   /** O22: symbol inference — first value of a symbol-ish column, else the
     * basename prefix before '_' (src/run.py:31-49).
     */
-  def inferSymbol(df: DataFrame, fallback: String): String = {
-    val candidates = Set("symbol", "ticker", "pair", "instrument", "sym")
-    df.columns.find(c => candidates.contains(c.toLowerCase)) match {
+  def inferSymbol(df: DataFrame, fallback: String): String =
+    Readers.symbolColumn(df.columns.toSeq) match {
       case Some(c) =>
         df.select(col(c)).filter(col(c).isNotNull).limit(1)
           .collect().headOption.map(_.get(0).toString.toUpperCase)
           .getOrElse(fallbackSymbol(fallback))
       case None => fallbackSymbol(fallback)
     }
-  }
 
   private def fallbackSymbol(basename: String): String =
     (if (basename.contains("_")) basename.split("_")(0) else basename).toUpperCase
@@ -76,15 +75,18 @@ object Runner {
     * suffix (src/run.py:280-302).
     */
   def outputBasename(df: DataFrame, symbol: String): String = {
-    val r = df.agg(min(col(TsCol)).as("_t0"), max(col(TsCol)).as("_t1"))
-      .collect()(0)
+    val r = df.agg(min(col(TsCol)), max(col(TsCol))).collect()(0)
+    outputName(symbol, r.getAs[java.sql.Timestamp](0),
+      r.getAs[java.sql.Timestamp](1))
+  }
+
+  private def outputName(symbol: String, t0: java.sql.Timestamp,
+                       t1: java.sql.Timestamp): String = {
     val fmt = java.time.format.DateTimeFormatter
       .ofPattern("yyyyMMdd").withZone(java.time.ZoneOffset.UTC)
-    val t0 = Option(r.getAs[java.sql.Timestamp]("_t0"))
-      .map(t => fmt.format(t.toInstant)).getOrElse("NA")
-    val t1 = Option(r.getAs[java.sql.Timestamp]("_t1"))
-      .map(t => fmt.format(t.toInstant)).getOrElse("NA")
-    s"${symbol}_${t0}_$t1"
+    def day(t: java.sql.Timestamp) =
+      Option(t).map(t => fmt.format(t.toInstant)).getOrElse("NA")
+    s"${symbol}_${day(t0)}_${day(t1)}"
   }
 
   final case class StageResult(name: String, rows: Long, path: String)
@@ -95,16 +97,22 @@ object Runner {
       exports: Seq[StageResult],
       errors: Seq[(String, String)])
 
-  /** O24: process one input frame end-to-end (src/run.py:60-253). */
+  /** O24: process one input frame end-to-end (src/run.py:60-253).
+    * `firstSymbol` is the symbol column's first non-null value when the
+    * caller already measured it ([[Readers.ReadResult.firstSymbol]]); it
+    * saves [[inferSymbol]]'s query.
+    */
   def processDataFrame(spark: SparkSession, input: DataFrame,
                        cfg: GraftConfig, sourceTz: Option[String],
                        basename: String, outDir: String,
-                       computeReports: Boolean = true): RunResult = {
+                       computeReports: Boolean = true,
+                       firstSymbol: Option[String] = None): RunResult = {
 
     var errors = Vector.empty[(String, String)]
 
     // symbol inference + injection (src/run.py:304-319)
-    val symbol = inferSymbol(input, basename)
+    val symbol = firstSymbol.map(_.toUpperCase)
+      .getOrElse(inferSymbol(input, basename))
     val injected =
       if (input.columns.exists(_.equalsIgnoreCase("SYMBOL")))
         input.withColumn("SYMBOL", upper(col("SYMBOL")))
@@ -124,8 +132,9 @@ object Runner {
         policyIfNa = cfg.policyIfNa))
     // cache before the per-timeframe fan-out — the reference re-reads its
     // in-memory frame for free; Spark must not re-run the normalize graph
-    // once per timeframe. The materialization count doubles as the
-    // post-dedup count for the duplicates report (no separate count job).
+    // once per timeframe. A narrow pass over the filled cache's own rows
+    // (no generated aggregation code) yields both the post-dedup count for
+    // the duplicates report and the time extent for the output name.
     // Persist level is size-aware (core.Sizing): in-memory columnar at
     // gate scale, DISK_ONLY past the spill threshold — the 60M-row probe
     // spent >25% of wall in GC with this cache (plus the repair cache)
@@ -134,7 +143,29 @@ object Runner {
     val ndfPlain = normalized0.unsorted
     val ndfEstBytes = graft.core.Sizing.planEstimate(ndfPlain)
     val ndf = ndfPlain.persist(graft.core.Sizing.storageFor(ndfEstBytes))
-    val postRows = timed("materialize_cache")(ndf.count())
+    val (postRows, baseName) = timed("materialize_cache") {
+      materialize(ndf)
+      val tsIdx = ndf.schema.fieldIndex(TsCol)
+      val parts = graft.core.Scan.partitions(ndf) { (_, it) =>
+        var n = 0L
+        var lo = Long.MaxValue
+        var hi = Long.MinValue
+        while (it.hasNext) {
+          val r = it.next()
+          n += 1
+          if (!r.isNullAt(tsIdx)) {
+            lo = math.min(lo, r.getLong(tsIdx)); hi = math.max(hi, r.getLong(tsIdx))
+          }
+        }
+        Iterator.single((n, lo, hi))
+      }
+      def stamp(us: Long) =
+        if (us == Long.MaxValue || us == Long.MinValue) null
+        else DateTimeUtils.toJavaTimestamp(us)
+      (parts.map(_._1).sum, outputName(symbol,
+        stamp(parts.map(_._2).foldLeft(Long.MaxValue)(math.min)),
+        stamp(parts.map(_._3).foldLeft(Long.MinValue)(math.max))))
+    }
     // defeated-policy tripwire (ADVICE r15): a LogicalRDD-bridged lineage
     // has no plan size estimate, so the persist above silently kept
     // MEMORY_AND_DISK. Now that the count has run we have a REAL row
@@ -158,20 +189,17 @@ object Runner {
         s", level: ${ndf.storageLevel.description}")
 
     val timeframes = if (cfg.timeframes.nonEmpty) cfg.timeframes else Seq("1T")
-    var exports = Vector.empty[StageResult]
-    val baseName = timed("output_basename")(outputBasename(ndf, symbol))
 
     // The per-timeframe chains are independent reads of the cached
     // normalized frame — run them CONCURRENTLY (the reference loops
     // sequentially, src/run.py:192-250; Spark schedules concurrent jobs on
-    // one session, so four repair→resample→export chains overlap their
+    // one session, so the repair→resample→export chains overlap their
     // shuffle/write latencies instead of stacking them). Failure isolation
-    // is unchanged: each chain catches independently. The NDJSON log is the
-    // only shared sink — serialized with a lock, ordered by timeframe.
+    // is unchanged: each chain fails independently. No task here blocks on
+    // another task of the pool, so the shared pool cannot starve.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = Runner.tfExecutionContext
-    val logLock = new Object
     // the normalization-report aggregation reads the cached pre-dedup frame
     // — overlap it with the timeframe chains; the source cache is released
     // only after the agg has run (Normalize's deferred-report contract)
@@ -223,77 +251,107 @@ object Runner {
         gp.interpolatePrices, gp.shortGapMinutes, partitionCols = seriesKeys,
         computeReport = false, cacheResult = true, assumeSorted = true,
         crossPartition = true, approxResultBytes = ndfEstBytes).df
-      // materialize BEFORE the fan-out: four chains read this cache
+      // materialize BEFORE the fan-out: the chains read this cache
       // concurrently, and racing an unmaterialized cache serializes them
       // all on the partition lock
-      timed(s"repair_base_$rule")(df.count())
+      timed(s"repair_base_$rule")(materialize(df))
       df
     }
-    val results = timeframes.map { tf =>
-      tf -> Future {
-        // The resampled frame is cached: export runs three actions
-        // (validate agg, write, hash) and must not re-execute the repair
-        // chain for each.
-        val (src, onGrid) =
-          if (correctMode) (baseRepaired.getOrElse(ndf), baseRule.contains(tf))
-          else cfg.gapPolicy match {
-            case Some(gp) =>
-              val r = Gaps.repairGaps(ndf, tf, gp.useFfillFor,
-                gp.interpolatePrices, gp.shortGapMinutes,
-                partitionCols = seriesKeys, computeReport = false,
-                cacheResult = true, assumeSorted = true,
-                crossPartition = true, approxResultBytes = ndfEstBytes).df
-              // materialize here so the export's concurrent validate+write
-              // read a hot cache instead of racing its first computation
-              timed(s"repair_$tf")(r.count())
-              (r, true)
-            case None => (ndf, false)
-          }
-        // input on the target bucket grid => one row per bucket => the
-        // resample aggregation degenerates to a projection (no shuffle)
-        val resPlain = Resample.resampleOhlc(src, tf,
-          partitionCols = seriesKeys,
-          inputOnBucketGrid = onGrid)
-        // The resampled frame is cached so the export's three concurrent
-        // actions (validate agg, write, hash head) read a hot cache; the
-        // count materializes it first because racing the FIRST
-        // computation of a cached plan serializes the jobs on the
-        // cache's partition locks. Measured both ways at the gate scale:
-        // dropping this cache re-scans the repair cache 3× per chain ×
-        // four concurrent chains and the pipeline went 3.6 s -> 5.0 s.
-        // EXCEPTION — on-grid res at spill scale: there res is a pure
-        // PROJECTION of the repair cache at full row count (the
-        // pipeline's largest frame), and caching it again builds a
-        // second full-size copy (the row-linear `resample_1T` build the
-        // 30× record shows at 0.16 s -> 4.5 s) that a DISK_ONLY source
-        // re-read serves just as well — so past the Sizing threshold the
-        // projection stays uncached and exports read the spilled repair
-        // cache directly.
-        val resSpillSized = onGrid &&
-          graft.core.Sizing.storageFor(ndfEstBytes) == StorageLevel.DISK_ONLY
-        val res = if (resSpillSized) resPlain else resPlain.cache()
-        if (!resSpillSized) timed(s"resample_$tf")(res.count())
-        val name = s"${baseName}_${Rules.suffix(tf)}"
-        val path = s"$outDir/$name.parquet"
-        val report = timed(s"export_$tf")(
-          Exporter.writeParquetWithMetadata(res, path,
-            cfg.compression, cfg.partitionCols,
-            Json.obj("exporter_version" -> "v1",
-              "timeframe" -> tf, "symbol" -> symbol),
-            knownDistinctTs = true,
-            writeMode = cfg.writeMode,
-            rowGroupSize = cfg.rowGroupSize))
-        logLock.synchronized {
-          Exporter.appendExportLog(s"$outDir/exports", report)
-        }
-        if (!resSpillSized) res.unpersist()
-        if (!correctMode && !(src eq ndf)) src.unpersist()
-        StageResult(name, report("rows").asInstanceOf[Long], path)
+
+    def export(tf: String, res: DataFrame): ListMap[String, Any] =
+      timed(s"export_$tf")(
+        Exporter.writeParquetWithMetadata(res,
+          s"$outDir/${baseName}_${Rules.suffix(tf)}.parquet",
+          cfg.compression, cfg.partitionCols,
+          Json.obj("exporter_version" -> "v1",
+            "timeframe" -> tf, "symbol" -> symbol),
+          knownDistinctTs = true,
+          writeMode = cfg.writeMode,
+          rowGroupSize = cfg.rowGroupSize))
+
+    // Every timeframe resampled from the shared source — correct mode's
+    // base rule and every rule aggregated from that base (or from the
+    // normalized frame without a gap policy) — comes from ONE multi-rule
+    // resample into ONE cached frame tagged by rule: on this sorted range
+    // layout a narrow scan with no shuffle, one materialization, and one
+    // export plan shape (a rule slice), so code is generated once instead
+    // of once per rule. The cache is materialized before any slice is
+    // exported: racing the FIRST computation of a cached plan serializes
+    // the jobs on the cache's partition locks.
+    // EXCEPTION — at spill scale the base rule's projection is the
+    // pipeline's largest frame, and caching it again builds a second
+    // full-size copy (the row-linear `resample_1T` build the 30× record
+    // shows at 0.16 s -> 4.5 s) that a DISK_ONLY source re-read serves
+    // just as well — so past the Sizing threshold it stays an uncached
+    // chain of its own and its export reads the spilled repair cache.
+    val spillSized =
+      graft.core.Sizing.storageFor(ndfEstBytes) == StorageLevel.DISK_ONLY
+    val aggregated =
+      if (correctMode || cfg.gapPolicy.isEmpty) timeframes.filterNot(baseRule.contains)
+      else Nil
+    val projected = if (spillSized) Nil else baseRule.toSeq
+    val fusedF: Option[Future[DataFrame]] =
+      if (aggregated.isEmpty && projected.isEmpty) None
+      else Some(Future {
+        val all = Resample.resampleOhlcRules(baseRepaired.getOrElse(ndf),
+          projected ++ aggregated, partitionCols = seriesKeys,
+          layoutSorted = true).cache()
+        timed("resample")(materialize(all))
+        all
+      })
+    val fused = (projected ++ aggregated).toSet
+
+    // The other timeframes resample an on-grid frame of their own: faithful
+    // mode's per-timeframe repair, or the spill-sized base rule.
+    def ownChain(tf: String): ListMap[String, Any] = {
+      val (src, repairedHere) = baseRepaired match {
+        case Some(base) => (base, false)
+        case None =>
+          val gp = cfg.gapPolicy.get
+          val r = Gaps.repairGaps(ndf, tf, gp.useFfillFor,
+            gp.interpolatePrices, gp.shortGapMinutes,
+            partitionCols = seriesKeys, computeReport = false,
+            cacheResult = true, assumeSorted = true,
+            crossPartition = true, approxResultBytes = ndfEstBytes).df
+          // materialize here so the export's write and hash read a hot
+          // cache instead of racing its first computation
+          timed(s"repair_$tf")(materialize(r))
+          (r, true)
+      }
+      val resPlain = Resample.resampleOhlc(src, tf,
+        partitionCols = seriesKeys, inputOnBucketGrid = true)
+      // cached (below spill scale, see above) so the export's write and
+      // hash read a hot cache: measured at the gate scale, dropping this
+      // cache re-scans the repair cache per action × concurrent chains
+      // and the pipeline went 3.6 s -> 5.0 s
+      val res = if (spillSized) resPlain else resPlain.cache()
+      try {
+        if (!spillSized) timed(s"resample_$tf")(materialize(res))
+        export(tf, res)
+      } finally {
+        if (!spillSized) res.unpersist()
+        if (repairedHere) src.unpersist()
       }
     }
+
+    val results: Seq[(String, Future[ListMap[String, Any]])] = timeframes.map { tf =>
+      tf -> (fusedF match {
+        case Some(f) if fused.contains(tf) =>
+          f.map(m => export(tf, Resample.ruleSlice(m, tf)))
+        case _ => Future(ownChain(tf))
+      })
+    }
+    var reports = Vector.empty[(String, ListMap[String, Any])]
     for ((tf, f) <- results) {
-      try exports :+= Await.result(f, Duration.Inf)
+      try reports :+= tf -> Await.result(f, Duration.Inf)
       catch { case e: Exception => errors :+= s"timeframe_$tf" -> e.getMessage }
+    }
+    // the NDJSON log gets this input's entries as ONE block in timeframe
+    // order — concurrent files never interleave their lines
+    Exporter.appendExportLogBlock(s"$outDir/exports", reports.map(_._2))
+    val exports = reports.map { case (tf, r) =>
+      StageResult(s"${baseName}_${Rules.suffix(tf)}",
+        r("rows").asInstanceOf[Long], r("path").toString)
     }
     val quality =
       try Await.result(qualityF, Duration.Inf)
@@ -307,26 +365,99 @@ object Runner {
       try Reporting.saveReport(quality, s"$outDir/reports/${basename}_quality.json")
       catch { case e: Exception => errors :+= "save_report" -> e.getMessage }
 
+    fusedF.flatMap(_.value).flatMap(_.toOption).foreach(_.unpersist())
     baseRepaired.foreach(_.unpersist())
     ndf.unpersist()
     RunResult(symbol, normReport, quality, exports, errors)
   }
 
-  /** EP1: full batch run over a raw directory. */
+  /** Fill a cached frame's cache by writing it to the no-op sink: unlike
+    * `count()` it generates no aggregation code, and unlike a raw RDD
+    * action it runs as a SQL execution — a cache built from outside one
+    * runs its shuffle stages in a context whose generated classes are not
+    * reused by the next run (measured: ~14 classes recompiled per run).
+    */
+  private def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Admission of batch files into the pipeline: at most `maxFiles` in
+    * flight, and their summed `bytes` within `budgetBytes` — except that
+    * one file is always admitted, however large. Acquire and release
+    * calls must pair; admission is first come, first served.
+    */
+  private final class FileAdmission(maxFiles: Int, budgetBytes: Long) {
+    private var files = 0
+    private var bytes = 0L
+    def acquire(size: Long): Unit = synchronized {
+      while (files > 0 && (files >= maxFiles || bytes + size > budgetBytes))
+        wait()
+      files += 1; bytes += size
+    }
+    def release(size: Long): Unit = synchronized {
+      files -= 1; bytes -= size
+      notifyAll()
+    }
+  }
+
+  /** EP1: full batch run over a raw directory.
+    *
+    * Each file is read and processed as its own concurrent chain, so the
+    * jobs of several files overlap and a file reuses the generated code
+    * the one before it compiled moments earlier (concurrent loads of one
+    * class are deduplicated by Spark's codegen cache). Results come back
+    * in sorted file order; an unreadable or unsupported file is
+    * quarantined (skipped), never failing the batch (extractor.py:56-59).
+    *
+    * Files in flight are bounded by the two limits Sizing already rests
+    * on. Memory: one file's pipeline keeps two large frames cached at once
+    * (normalized + repaired), and Sizing keeps that pair within half the
+    * heap by spilling any frame past `spillBytes`. Concurrent files share
+    * that budget: a file is admitted while the in-flight files' on-disk
+    * bytes (the stand-in for their frames' size) sum to at most
+    * `spillBytes`, so their pairs together stay near half the heap; a
+    * file larger than that runs alone. CPU: at most one file per core —
+    * a file's pipeline is a chain of small jobs, so more files than cores
+    * only queue tasks. File chains run on their own pool, sized to that
+    * bound: they block on their timeframe chains, and must never hold
+    * threads of the pool those chains need.
+    */
   def runBatch(spark: SparkSession, cfg: GraftConfig,
                dryRun: Boolean = true): Seq[RunResult] = {
-    val scan = Readers.loadAll(spark, cfg.rawPath)
-    scan.loaded.map { r =>
-      try
-        if (dryRun)
-          RunResult(inferSymbol(r.df, r.filename), ListMap.empty,
-            ListMap.empty, Nil, Nil)
-        else
-          processDataFrame(spark, r.df, cfg, cfg.sourceTzDefault,
-            r.filename, cfg.processedPath)
-      // the pipeline materialized (and cached) everything it derives from
-      // the source frame — the read-time parse cache can go
-      finally r.release()
-    }
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val files = Option(new java.io.File(cfg.rawPath).listFiles())
+      .getOrElse(Array.empty).filter(_.isFile).sortBy(_.getPath).toSeq
+    val cores = Runtime.getRuntime.availableProcessors
+    val admission = new FileAdmission(cores, graft.core.Sizing.spillBytes)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(cores, files.size)))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+
+    def runFile(path: String): Option[RunResult] =
+      scala.util.Try(Readers.read(spark, path)).toOption.map { r =>
+        try
+          if (dryRun)
+            RunResult(r.firstSymbol.map(_.toUpperCase)
+              .getOrElse(inferSymbol(r.df, r.filename)), ListMap.empty,
+              ListMap.empty, Nil, Nil)
+          else
+            processDataFrame(spark, r.df, cfg, cfg.sourceTzDefault,
+              r.filename, cfg.processedPath, firstSymbol = r.firstSymbol)
+        // the pipeline materialized (and cached) everything it derives
+        // from the source frame — the read-time parse cache can go
+        finally r.release()
+      }
+
+    try {
+      val futures = files.map { f =>
+        val size = f.length()
+        admission.acquire(size)
+        Future(try runFile(f.getPath) finally admission.release(size))
+      }
+      // wait for every file before surfacing the first failure, so no
+      // pipeline keeps running after this call returns
+      val outcomes = futures.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      outcomes.flatMap(_.get)
+    } finally pool.shutdown()
   }
 }

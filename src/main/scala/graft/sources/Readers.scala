@@ -45,7 +45,53 @@ object Readers {
     */
   final case class ReadResult(df: DataFrame, meta: ListMap[String, Any],
                               filename: String,
-                              release: () => Unit = () => ())
+                              release: () => Unit = () => (),
+                              /** first non-null value of the symbol column
+                                * ([[symbolColumn]]) in file order, when the
+                                * read's own count pass already measured it */
+                              firstSymbol: Option[String] = None)
+
+  /** Column names the pipeline's symbol inference reads (reference O22:
+    * src/run.py:31-49), matched case-insensitively.
+    */
+  val SymbolCols: Set[String] = Set("symbol", "ticker", "pair", "instrument", "sym")
+
+  /** The first column, in frame order, that names the symbol. */
+  def symbolColumn(columns: Seq[String]): Option[String] =
+    columns.find(c => SymbolCols.contains(c.toLowerCase))
+
+  /** The quarantine scan's ONE eager job: total rows, corrupt rows and —
+    * when the frame names a symbol column — that column's first non-null
+    * clean value in file order, from one narrow pass that also fills the
+    * cache. The pass reads the cache's own row iterator (no aggregate
+    * plan, so no generated aggregation code); its partitions are the file
+    * splits in order, so partition order then row order is file order.
+    */
+  private def quarantineCounts(corruptScan: DataFrame, columns: Seq[String])
+      : (Long, Long, Option[String]) = {
+    val schema = corruptScan.schema
+    val cIdx = schema.fieldIndex(CorruptCol)
+    // string columns only: other types' internal values print differently
+    // from their external ones, so those stay with Runner.inferSymbol
+    val sym = symbolColumn(columns)
+      .filter(c => schema(c).dataType == org.apache.spark.sql.types.StringType)
+      .map(schema.fieldIndex)
+    val parts = graft.core.Scan.partitions(corruptScan) { (_, it) =>
+      var total = 0L
+      var corrupt = 0L
+      var first: Option[String] = None
+      while (it.hasNext) {
+        val r = it.next()
+        total += 1
+        if (!r.isNullAt(cIdx)) corrupt += 1
+        else if (first.isEmpty) sym.foreach { i =>
+          if (!r.isNullAt(i)) first = Some(r.getUTF8String(i).toString)
+        }
+      }
+      Iterator.single((total, corrupt, first))
+    }
+    (parts.map(_._1).sum, parts.map(_._2).sum, parts.flatMap(_._3).headOption)
+  }
 
   /** CSV source with ROW-level quarantine (the O1 scale note): rows that
     * fail the schema are counted into the read metadata (`corrupt_rows`)
@@ -62,15 +108,18 @@ object Readers {
     *    quarantines. (Spark's CSV parser never treats token-count mismatch
     *    as corrupt: short rows null-fill, long rows drop extra tokens.)
     * File-level quarantine (unreadable/unsupported files,
-    * extractor.py:56-59) stays in `loadAll`.
+    * extractor.py:56-59) stays with the callers (`loadAll`,
+    * `Runner.runBatch`).
     *
     * The metadata counts are eager (the reference reads eagerly too) and
     * ONE cached PERMISSIVE+corrupt-column scan serves everything: the
     * cache build parses every field once (caching materializes whole rows,
     * so the parser converts every column and populates the corrupt column
     * regardless of downstream pruning — which also satisfies Spark's
-    * corrupt-column-only query restriction), the total and corrupt counts
-    * read it, and the RETURNED frame's first materialization reads it too
+    * corrupt-column-only query restriction), one narrow pass over it
+    * yields the total and corrupt counts (and the first symbol, see
+    * [[quarantineCounts]]), and the RETURNED frame's first materialization
+    * reads it too
     * — the caller drops it via `ReadResult.release()` afterwards. The
     * returned frame filters on the corrupt column behind an RDD barrier:
     * the barrier references every field, so the row set is identical under
@@ -97,17 +146,31 @@ object Readers {
         org.apache.spark.sql.types.StructField(CorruptCol, StringType)))
       .csv(path)
       .cache()
-    val totalRows = corruptScan.count() // fills the cache — the only parse
-    val corruptRows = corruptScan.filter(col(CorruptCol).isNotNull).count()
+    quarantined(spark, corruptScan, applied, path, "csv")
+  }
+
+  /** The clean frame behind the RDD barrier, plus the read metadata from
+    * [[quarantineCounts]] (its job is the only parse).
+    */
+  private def quarantined(spark: SparkSession, corruptScan: DataFrame,
+                          applied: org.apache.spark.sql.types.StructType,
+                          path: String, format: String): ReadResult = {
+    val (totalRows, corruptRows, firstSymbol) =
+      quarantineCounts(corruptScan, applied.fieldNames.toSeq)
     val clean = corruptScan.filter(col(CorruptCol).isNull).drop(CorruptCol)
-    val df = spark
-      .createDataFrame(clean.rdd, clean.schema) // projection-proof barrier
+    // projection-proof barrier: the clean rows as an opaque RDD, handed
+    // back to Catalyst without a round trip through external Rows
+    val df = org.apache.spark.sql.graft.GraftSqlBridge
+      .internalCreateDataFrame(spark,
+        graft.core.Scan.inSession(clean)(graft.core.Scan.rows(clean))
+          .map(_.copy()), clean.schema)
       .withColumn(FileOrderCol, monotonically_increasing_id())
     ReadResult(df,
-      meta(df, path, "csv", totalRows - corruptRows) +
+      meta(df, path, format, totalRows - corruptRows) +
         ("corrupt_rows" -> corruptRows),
       baseName(path),
-      release = () => corruptScan.unpersist())
+      release = () => corruptScan.unpersist(),
+      firstSymbol = firstSymbol)
   }
 
   /** Name of the transient PERMISSIVE corrupt-record column. */
@@ -142,17 +205,7 @@ object Readers {
         org.apache.spark.sql.types.StructField(CorruptCol, StringType)))
       .json(path)
       .cache()
-    val totalRows = corruptScan.count() // fills the cache — the only parse
-    val corruptRows = corruptScan.filter(col(CorruptCol).isNotNull).count()
-    val clean = corruptScan.filter(col(CorruptCol).isNull).drop(CorruptCol)
-    val df = spark
-      .createDataFrame(clean.rdd, clean.schema) // projection-proof barrier
-      .withColumn(FileOrderCol, monotonically_increasing_id())
-    ReadResult(df,
-      meta(df, path, "ndjson", totalRows - corruptRows) +
-        ("corrupt_rows" -> corruptRows),
-      baseName(path),
-      release = () => corruptScan.unpersist())
+    quarantined(spark, corruptScan, applied, path, "ndjson")
   }
 
   def readParquet(spark: SparkSession, path: String): ReadResult = {

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.StructType
   * would re-box every field of every row through the encoder — measured
   * as tens of seconds of pure GC per pipeline at the 60M-row probe scale.
   *
-  * Keep this object MINIMAL: one constructor, no logic. Anything clever
+  * Keep this object MINIMAL: thin forwarders, no logic. Anything clever
   * belongs on the graft side of the boundary.
   */
 object GraftSqlBridge {
@@ -33,4 +33,12 @@ object GraftSqlBridge {
                               rdd: RDD[InternalRow],
                               schema: StructType): DataFrame =
     spark.asInstanceOf[ClassicSession].internalCreateDataFrame(rdd, schema)
+
+  /** Run `f` in the session's artifact scope, as Spark runs its own SQL
+    * executions: plans built and jobs submitted inside `f` (raw RDD
+    * actions) then load generated classes through the same class loaders
+    * as the session's queries, so code the two share compiles once.
+    */
+  def withSessionArtifacts[T](spark: SparkSession)(f: => T): T =
+    spark.asInstanceOf[ClassicSession].artifactManager.withResources(f)
 }

@@ -112,6 +112,37 @@ class CrossPartitionSpec extends SparkSpec {
     laid.unpersist(); df.unpersist()
   }
 
+  test("multi-rule resample scan equals the per-rule aggregation plans") {
+    import graft.operators.Resample
+    // OHLC + an unmapped numeric column (mean policy); OPEN nulls differ
+    // from CLOSE nulls so first/last skip different rows
+    val df = fixture()
+      .withColumn("OPEN", when(col("VOLUME").isNotNull, col("CLOSE") - 0.5))
+      .withColumn("HIGH", col("CLOSE") + 0.25)
+      .withColumn("LOW", col("CLOSE") - 0.75)
+      .withColumn("SPREAD", col("VOLUME") / 7.0)
+      .filter(col("TIMESTAMP").isNotNull)
+    // 16-way range split: buckets of every rule straddle partition bounds
+    val laid = rangeLayout(df, 16).cache()
+    assert(laid.count() > 0 && laid.rdd.getNumPartitions == 16)
+    val rules = Seq("1T", "5T", "15T", "1H", "1D")
+    val multi = Resample.resampleOhlcRules(laid, rules,
+      partitionCols = Seq("SYMBOL"), layoutSorted = true).cache()
+    val viaPlans = Resample.resampleOhlcRules(laid, rules,
+      partitionCols = Seq("SYMBOL"))
+    def exact(d: DataFrame) =
+      d.orderBy("SYMBOL", "TIMESTAMP").collect().map(_.toSeq).toSeq
+    for (rule <- rules) {
+      val ref = Resample.resampleOhlc(laid, rule, partitionCols = Seq("SYMBOL"))
+      val got = Resample.ruleSlice(multi, rule)
+      assert(got.columns.toSeq == ref.columns.toSeq, rule)
+      assert(exact(got) == exact(ref), s"scan vs per-rule plan at $rule")
+      assert(exact(Resample.ruleSlice(viaPlans, rule)) == exact(ref),
+        s"unsorted-layout path vs per-rule plan at $rule")
+    }
+    multi.unpersist(); laid.unpersist()
+  }
+
   test("keyed dedup emits the range layout with a single exchange and sort") {
     import scala.collection.immutable.ListMap
     val df = fixture()

@@ -95,8 +95,8 @@ class ReportingExportSpec extends SparkSpec {
     }.toDF("TIMESTAMP", "OPEN", "HIGH", "LOW", "CLOSE", "VOLUME")
     Exporter.writeParquetWithMetadata(
       big.coalesce(1), small, rowGroupSize = Some(4096L))
-    // the exporter range-parallelizes single-partition writes; every part
-    // file holds ~625 rows, far above the 4KB block budget
+    // the frame fits one file, so the exporter writes it as is: one part
+    // file of 5000 rows, far above the 4KB block budget
     val part = Files.list(Paths.get(small)).toArray.map(_.toString)
       .filter(p => p.endsWith(".parquet") && !p.contains(".meta"))
     assert(part.nonEmpty)

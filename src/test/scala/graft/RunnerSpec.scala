@@ -64,6 +64,92 @@ class RunnerSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(dryDir)))
   }
 
+  /** `n` one-minute candles of `sym` from 2024-01-01 (every 7th minute
+    * after the first missing), with a symbol column, as `<sym>.csv`.
+    */
+  private def writeSeries(dir: java.nio.file.Path, sym: String, n: Int,
+                          seed: Int): Unit = {
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    val sb = new StringBuilder("timestamp,open,high,low,close,volume,symbol\n")
+    for (m <- 0 until n if m % 7 != 3) {
+      val o = 1.0 + seed * 0.1 + ((m * 37 + seed) % 101) * 0.001
+      sb.append(f"${fmt.format(t0.plusMinutes(m.toLong))},$o%.5f," +
+        f"${o + 0.0007}%.5f,${o - 0.0006}%.5f,${o + 0.0001}%.5f," +
+        s"${100 + (m * 13 + seed) % 50},$sym\n")
+    }
+    Files.writeString(dir.resolve(s"$sym.csv"), sb.toString)
+  }
+
+  /** The export log's (symbol, timeframe, rows, content_hash) per line. */
+  private def exportLog(outDir: String): Seq[Map[String, String]] = {
+    val field = "\"(symbol|timeframe|rows|content_hash)\"\\s*:\\s*\"?([^\",}]*)".r
+    Files.readAllLines(Paths.get(s"$outDir/exports/export_log.ndjson"))
+      .asScala.toSeq.map(l =>
+        field.findAllMatchIn(l).map(m => m.group(1) -> m.group(2).trim).toMap)
+  }
+
+  test("batch of files: sorted results, one-file parity, one log block per file") {
+    val work = Files.createTempDirectory("graft_multi")
+    val raw = Files.createDirectories(work.resolve("raw"))
+    val syms = Seq("AAA", "BBB", "CCC")
+    for ((sym, i) <- syms.zipWithIndex) writeSeries(raw, sym, 240 + 60 * i, i)
+    Files.writeString(raw.resolve("bad.xyz"), "not a supported file")
+    val cfg = GraftConfig(rawPath = raw.toString,
+      processedPath = work.resolve("all").toString)
+
+    val results = Runner.runBatch(spark, cfg, dryRun = false)
+    assert(results.map(_.symbol) == syms, "sorted file order, bad.xyz skipped")
+    assert(results.forall(_.errors.isEmpty), results.flatMap(_.errors))
+    val log = exportLog(cfg.processedPath)
+    val tfs = cfg.timeframes
+    assert(log.size == syms.size * tfs.size)
+    // one contiguous block per file, in configured timeframe order
+    for (block <- log.grouped(tfs.size)) {
+      assert(block.map(_("symbol")).distinct.size == 1, block)
+      assert(block.map(_("timeframe")) == tfs, block)
+    }
+    assert(log.map(_("symbol")).distinct.sorted == syms)
+
+    // every (symbol, timeframe) equals a one-file run of that file
+    def rows(path: String) =
+      spark.read.parquet(path).orderBy("TIMESTAMP").collect().toSeq
+    for ((sym, r) <- syms.zip(results)) {
+      val solo = Files.createDirectories(work.resolve(s"solo_$sym"))
+      Files.copy(raw.resolve(s"$sym.csv"), solo.resolve(s"$sym.csv"))
+      val out = work.resolve(s"out_$sym").toString
+      val one = Runner.runBatch(spark,
+        cfg.copy(rawPath = solo.toString, processedPath = out), dryRun = false)
+      assert(one.map(_.symbol) == Seq(sym))
+      def entries(l: Seq[Map[String, String]]) =
+        l.filter(_("symbol") == sym)
+          .map(e => (e("timeframe"), e("rows"), e("content_hash")))
+      assert(entries(log) == entries(exportLog(out)), sym)
+      assert(r.exports.map(_.name) == one.head.exports.map(_.name))
+      for ((a, b) <- r.exports.zip(one.head.exports))
+        assert(rows(a.path) == rows(b.path), a.name)
+    }
+  }
+
+  test("a steady-state batch run compiles no generated code") {
+    // Spark's codegen cache holds 100 classes (default): one file's
+    // pipeline must fit it, or every run of a batch recompiles its code
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val work = Files.createTempDirectory("graft_codegen")
+    val raw = Files.createDirectories(work.resolve("raw"))
+    for (i <- 0 until 2) writeSeries(raw, f"SYM$i%02d", 600, i)
+    val cfg = GraftConfig(rawPath = raw.toString)
+    def run(tag: String): Long = {
+      val c0 = METRIC_COMPILATION_TIME.getCount
+      val r = Runner.runBatch(spark,
+        cfg.copy(processedPath = work.resolve(tag).toString), dryRun = false)
+      assert(r.size == 2 && r.forall(_.errors.isEmpty), r.flatMap(_.errors))
+      METRIC_COMPILATION_TIME.getCount - c0
+    }
+    run("first")
+    assert(run("second") == 0, "the second run recompiled generated classes")
+  }
+
   test("resample modes: correct aggregates the base grid, faithful grid-samples") {
     import org.apache.spark.sql.functions.col
     val work = Files.createTempDirectory("graft_modes")
