@@ -84,9 +84,9 @@ object FastFill {
   }
 
   /** Internal → external for partition-key values, matching what a
-    * DataFrame `collect()` yields for the same column (the anchors job
-    * collects externally): the two seed jobs and the fill scan must agree
-    * on map keys. Supported key types are checked by `fill`.
+    * DataFrame `collect()` yields for the same column: the two seed jobs
+    * and the fill scan must agree on map keys. Supported key types are
+    * checked by `fill`.
     */
   private def externalizeKey(v: Any): Any = v match {
     case u: UTF8String => u.toString
