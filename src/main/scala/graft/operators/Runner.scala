@@ -296,7 +296,8 @@ object Runner {
         val all = Resample.resampleOhlcRules(baseRepaired.getOrElse(ndf),
           projected ++ aggregated, partitionCols = seriesKeys,
           layoutSorted = true).cache()
-        timed("resample")(materialize(all))
+        try timed("resample")(materialize(all))
+        catch { case e: Throwable => all.unpersist(); throw e }
         all
       })
     val fused = (projected ++ aggregated).toSet
